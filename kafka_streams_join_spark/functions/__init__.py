@@ -1,3 +1,3 @@
-from .payload import join_payload, nullable_pair
+from .payload import join_payload
 
-__all__ = ["join_payload", "nullable_pair"]
+__all__ = ["join_payload"]

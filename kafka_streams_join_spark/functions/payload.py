@@ -1,4 +1,4 @@
-"""Join-output value construction (SURVEY §2.2 P3/P4).
+"""Join-output value construction (SURVEY §2.2 P3).
 
 The reference builds its joined value by string interpolation, NOT a JSON
 library: ``s\"\"\"{"display":$value2,"click":$value1}\"\"\"``
@@ -22,13 +22,3 @@ def join_payload(display_value: Column, click_value: Column) -> Column:
         click_value,
         F.lit("}"),
     )
-
-
-def nullable_pair(left_value: Column, right_value: Column) -> Column:
-    """P4 — ``(v1, Option(v2))`` tuple as a struct with nullable right.
-
-    The outer-join output already carries SQL NULL for the absent side
-    (Option ≙ NULL, SURVEY §1.2); this packages it as one column when a
-    single-value stream is wanted.
-    """
-    return F.struct(left_value.alias("left"), right_value.alias("right"))

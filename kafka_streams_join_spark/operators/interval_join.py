@@ -66,6 +66,8 @@ def interval_join(
 
     Returns all columns of both sides prefixed (``l_``/``r_``) so self-joins
     stay unambiguous. ``how`` ∈ inner / left_outer / left_semi / left_anti.
+    The streaming joins (``streaming.topology``) watermark their inputs and
+    call this, so batch and stream share one band definition.
     """
     lp = _prefix(left, left_prefix)
     rp = _prefix(right, right_prefix)
@@ -105,7 +107,9 @@ def shift_event_time(df: DataFrame, delta: str, ts: str = "ts") -> DataFrame:
 
     The reference delays *delivery* by Δ wall-clock while preserving the event
     timestamp; in a batch/event-time world the only observable effect is a
-    shifted time axis, i.e. ``ts + Δ``. (The streaming shifter lives in
-    streaming/shifter.py; watermarks subsume the delay for correctness.)
+    shifted time axis, i.e. ``ts + Δ``. A pure projection with no state, so
+    it works on batch and streaming DataFrames alike; ``streaming.shifter``
+    exports it as ``shift_stream`` (watermarks subsume the delay for
+    correctness).
     """
     return df.withColumn(ts, F.col(ts) + F.expr(f"INTERVAL {delta}"))

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import atexit
 import hashlib
+import logging
 import os
 import shutil
 import tempfile
@@ -35,6 +36,8 @@ import time
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+logger = logging.getLogger(__name__)
 
 # STRONG references, not a WeakSet: staged frames are locals of query
 # builder functions and the downstream DataFrames hold no Python
@@ -108,11 +111,10 @@ def staged_table(df: DataFrame, key: str, src_dir: str | None = None) -> DataFra
         )
         t0 = time.perf_counter()
         df.write.mode("overwrite").parquet(path)
-        # Stage-build cost accounting (round 15): the first consumer's
-        # timed run absorbs this one-time build, so per-query bench
-        # numbers understate standalone cost without this line. Bench
-        # and parity transcripts treat '#'-prefixed lines as comments.
-        print(f"# STAGE-BUILD {key} {time.perf_counter() - t0:.3f}s")
+        # Stage-build cost accounting: the first consumer's timed run
+        # absorbs this one-time build, so per-query bench numbers
+        # understate standalone cost without this record.
+        logger.info("STAGE-BUILD %s %.3fs", key, time.perf_counter() - t0)
         _TABLES[key] = path
     return spark.read.parquet(_TABLES[key])
 

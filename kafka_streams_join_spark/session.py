@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def _kafka_connector_coordinate() -> str:
     """Maven coordinate of the spark-sql-kafka connector matching the
@@ -45,7 +43,8 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     On a real cluster, ``master`` comes from spark-submit; locally we default
-    to ``local[$SPARK_GRAFT_CPUS]``.
+    to ``local[$SPARK_GRAFT_CPUS]``, and shuffle partitions default to the
+    same core count.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Python workers (incl. the transformWithStateInPandas driver worker,
@@ -76,7 +75,7 @@ def get_spark(
         builder
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -92,6 +91,9 @@ def get_spark(
         # pair (9312/8272/8792 vs 6156/7697/7731 rows/s) and on the
         # timeout join 2 of 3 (best 8435 vs 7734). Config-only — emission
         # semantics unchanged; parameterised so a deployment can override.
+        # Spark pins the provider in each query's checkpoint metadata, so a
+        # query resumed from an existing checkpoint keeps its old provider
+        # whatever this setting says; only new checkpoints pick it up.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             os.environ.get(

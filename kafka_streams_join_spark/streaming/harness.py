@@ -46,8 +46,13 @@ class FileStream:
 
     def add_batch(self, rows: list[dict]) -> None:
         """One file == one micro-batch (maxFilesPerTrigger=1)."""
-        path = os.path.join(self.dir, f"batch-{self._n:05d}.json")
-        tmp = path + ".tmp"
+        name = f"batch-{self._n:05d}.json"
+        path = os.path.join(self.dir, name)
+        # The temp file lives outside the watched directory: the source
+        # lists every name there, and a temp file it listed carries a
+        # current mtime, which makes it skip the pinned (older) mtime of
+        # the renamed file below as past maxFileAge — the batch is never read.
+        tmp = os.path.join(self.root, f".{self.name}-{name}.tmp")
         with open(tmp, "w") as f:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
@@ -79,14 +84,6 @@ def start_memory_sink(
             "checkpointLocation", os.path.join(checkpoint_root, sink)
         )
     return writer.start(), sink
-
-
-def process_available(query: StreamingQuery, timeout_s: float = 60.0) -> None:
-    """Run the query until all currently-available input is consumed."""
-    deadline = time.time() + timeout_s
-    query.processAllAvailable()
-    if time.time() > deadline:  # pragma: no cover — processAllAvailable blocks
-        raise TimeoutError(f"streaming query {query.name} did not drain in {timeout_s}s")
 
 
 def _progress_dict(p) -> dict:

@@ -10,7 +10,8 @@ window has provably elapsed) is subsumed by ``withWatermark`` — see
 ``topology.stream_timeout_join``. This module keeps the shifter as an API
 citizen for parity:
 
-- ``shift_stream``: event-time shift (the only event-time-visible effect).
+- ``shift_stream``: event-time shift (the only event-time-visible effect);
+  the same function as ``operators.interval_join.shift_event_time``.
 - ``DelayedDeliveryWriter``: wall-clock-delayed *delivery* via foreachBatch,
   for pipelines that genuinely need processing-time holds (e.g., embargoed
   publishing). Blocks the micro-batch, not per record — a deliberate,
@@ -25,11 +26,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def shift_stream(df: DataFrame, delta: str, ts: str = "ts") -> DataFrame:
-    """Event-time shift: ts + Δ, key/value untouched. Works on batch and
-    streaming DataFrames (pure projection, no state)."""
-    return df.withColumn(ts, F.col(ts) + F.expr(f"INTERVAL {delta}"))
+from ..operators.interval_join import shift_event_time as shift_stream
 
 
 class DelayedDeliveryWriter:

@@ -3,9 +3,13 @@
 Re-expresses the reference topology (``TimeoutJoinTest.scala:53-104``)
 declaratively:
 
-- J1 "clicked displays" (``:75-79``): windowed inner join,
-  ``JoinWindows.of("occurred-before").before(W)`` → equi-join on key plus a
-  time-range condition, with watermarks bounding state.
+- The reference declares one band twice: the clicked join (``:78``,
+  ``JoinWindows.of(...).before(W)`` with clicks on the left) and the missed
+  join (``:85``, ``.after(W)`` with displays on the left) both mean
+  ``c.ts ∈ [d.ts, d.ts + W]``. Here both outputs use that one band, with
+  displays on the left, built by ``operators.interval_join``.
+- J1 "clicked displays" (``:75-79``): windowed inner join on the band,
+  with watermarks bounding state.
 - J3 "missed displays" (``:82-92`` + ``TopicShifter.scala``): the reference
   needed a hand-rolled delay (TopicShifter) so that "null right side" meant
   "genuinely no click". Spark's watermark subsumes the shifter entirely: a
@@ -27,21 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.payload import join_payload
-from ..operators.interval_join import JoinWindow
-
-
-def _interval_delay(window: JoinWindow) -> str:
-    """Watermark delay covering the join band span on either side."""
-    # the band reaches `before` into the past and `after` into the future;
-    # a watermark of before+after on both inputs bounds state correctly for
-    # inner AND outer emission (Spark derives the exact state watermark from
-    # the range condition; this is the user-facing late-data allowance).
-    parts = []
-    if window.before != "0 seconds":
-        parts.append(window.before)
-    if window.after != "0 seconds":
-        parts.append(window.after)
-    return parts[0] if len(parts) == 1 else " ".join(parts) if parts else "0 seconds"
+from ..operators.interval_join import JoinWindow, interval_join
 
 
 def stream_interval_join(
@@ -57,27 +47,23 @@ def stream_interval_join(
     watermark_delay: str | None = None,
     watermark_left: bool = True,
 ) -> DataFrame:
-    """Streaming twin of ``operators.interval_join`` — watermarks + the same
-    equi+band condition. Mirrors ``JoinWindows.of(…).before/after``
-    (``TimeoutJoinTest.scala:78,85``): window → (watermark, range-condition)
-    derivation is automatic, per SURVEY §7's API requirement.
+    """Streaming twin of ``operators.interval_join``: watermark both inputs
+    by ``watermark_delay`` (default before+after, the band's full span),
+    then apply the same equi+band join (``TimeoutJoinTest.scala:78,85``).
+    The watermark tag survives the prefixing alias, so Spark derives the
+    state watermark from the band condition.
 
     ``watermark_left=False`` is for CHAINED stateful pipelines: an input
     that is itself the output of a watermarked join already carries a
     propagated watermark, and redefining one is a Spark analysis error
     (multiple-stateful-operator rule) — see ``stream_funnel``."""
-    delay = watermark_delay or _interval_delay(window)
-    lp = left.select([F.col(c).alias(f"{left_prefix}{c}") for c in left.columns])
-    rp = right.select([F.col(c).alias(f"{right_prefix}{c}") for c in right.columns])
-    lw = (
-        lp.withWatermark(f"{left_prefix}{left_ts}", delay) if watermark_left else lp
+    delay = watermark_delay or f"{window.before} {window.after}"
+    if watermark_left:
+        left = left.withWatermark(left_ts, delay)
+    return interval_join(
+        left, right.withWatermark(right_ts, delay), on, window, how,
+        left_ts, right_ts, left_prefix, right_prefix,
     )
-    rw = rp.withWatermark(f"{right_prefix}{right_ts}", delay)
-    cond = (
-        (F.col(f"{left_prefix}{on}") == F.col(f"{right_prefix}{on}"))
-        & window.band(F.col(f"{left_prefix}{left_ts}"), F.col(f"{right_prefix}{right_ts}"))
-    )
-    return lw.join(rw, cond, how)
 
 
 def stream_timeout_join(
@@ -136,7 +122,9 @@ def stream_table_join(
 class TimeoutJoinTopology:
     """The whole reference topology (``TimeoutJoinTest.buildStreams``,
     ``TimeoutJoinTest.scala:53-104``): two input streams → two output
-    streams.
+    streams, both on one band ``JoinWindow(after=W)`` with displays on the
+    left. The reference's ``.before(W)`` at ``:78`` (clicks on the left)
+    and ``.after(W)`` at ``:85`` (displays on the left) are that same band.
 
     - ``clicked``: inner windowed join, payload built by byte-exact string
       interpolation (``:76-78``).
@@ -148,25 +136,23 @@ class TimeoutJoinTopology:
     """
 
     def __init__(self, window: str = "1 second") -> None:
-        self.window = window
+        self.band = JoinWindow(after=window)
 
     def clicked_displays(self, displays: DataFrame, clicks: DataFrame) -> DataFrame:
-        """Click at t joins displays in [t - W, t] (``JoinWindows.before``)."""
+        """Displays joined with same-key clicks in [d.ts, d.ts + W]."""
         j = stream_interval_join(
-            clicks, displays, on="key", window=JoinWindow(before=self.window),
-            how="inner", left_prefix="c_", right_prefix="d_",
+            displays, clicks, on="key", window=self.band,
+            how="inner", left_prefix="d_", right_prefix="c_",
         )
         return j.select(
-            F.col("c_key").alias("key"),
+            F.col("d_key").alias("key"),
             join_payload(F.col("d_value"), F.col("c_value")).alias("value"),
         )
 
     def missed_displays(self, displays: DataFrame, clicks: DataFrame) -> DataFrame:
-        """Displays with no same-key click in [t, t + W] (``.after`` + null
-        filter + mapValues, ``TimeoutJoinTest.scala:82-91``)."""
-        missed = stream_timeout_join(
-            displays, clicks, on="key", window=JoinWindow(after=self.window),
-        )
+        """Displays with no same-key click in [d.ts, d.ts + W] (``.after`` +
+        null filter + mapValues, ``TimeoutJoinTest.scala:82-91``)."""
+        missed = stream_timeout_join(displays, clicks, on="key", window=self.band)
         return missed.select("key", "value")
 
 

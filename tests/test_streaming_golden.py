@@ -12,17 +12,23 @@ playing the role of the ongoing traffic a live pipeline always has.
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import tempfile
+import time
 
 import pytest
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
+    drain_until_ingested,
     read_until,
     start_memory_sink,
 )
-from kafka_streams_join_spark.streaming.shifter import shift_stream
+from kafka_streams_join_spark.streaming.shifter import (
+    DelayedDeliveryWriter,
+    shift_stream,
+)
 from kafka_streams_join_spark.streaming.topology import TimeoutJoinTopology
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -48,15 +54,18 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _run_scenario(spark, tmpdir, display_rows, click_rows):
-    """Build the full topology, feed scenario + flush batches, drain, read
-    both output sinks."""
+def _run_scenario(spark, tmpdir, display_batches, click_batches):
+    """Build the full topology, feed the scenario's micro-batches (one list
+    of rows per batch, batch i of both streams in micro-batch i) + flush
+    batches, drain, read both output sinks."""
+    assert len(display_batches) == len(click_batches)
     displays = FileStream(spark, tmpdir, "displays")
     clicks = FileStream(spark, tmpdir, "clicks")
-    # batch 0: the scenario rows; batches 1-2: watermark flushes on BOTH
-    # streams (global watermark is the min across inputs)
-    displays.add_batch(display_rows)
-    clicks.add_batch(click_rows)
+    for d_rows, c_rows in zip(display_batches, click_batches):
+        displays.add_batch(d_rows)
+        clicks.add_batch(c_rows)
+    # then two watermark flushes on BOTH streams (global watermark is the
+    # min across inputs)
     for n, off in ((1, 3600.0), (2, 7200.0)):
         displays.add_batch(_flush(n, off))
         clicks.add_batch(_flush(n, off))
@@ -90,8 +99,8 @@ def test_scenario1_click_inside_window(spark, tmpdir):
     clicked, missed = _run_scenario(
         spark,
         tmpdir,
-        display_rows=[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}],
-        click_rows=[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}],
+        display_batches=[[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
+        click_batches=[[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}]],
     )
     assert clicked == [(KEY, JOINED)]
     assert missed == []
@@ -103,8 +112,8 @@ def test_scenario2_click_outside_window(spark, tmpdir):
     clicked, missed = _run_scenario(
         spark,
         tmpdir,
-        display_rows=[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}],
-        click_rows=[{"key": KEY, "value": CLICK, "ts": _ts(2.0)}],
+        display_batches=[[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
+        click_batches=[[{"key": KEY, "value": CLICK, "ts": _ts(2.0)}]],
     )
     assert clicked == []
     assert missed == [(KEY, DISPLAY)]
@@ -116,8 +125,45 @@ def test_scenario3_unrelated_click(spark, tmpdir):
     clicked, missed = _run_scenario(
         spark,
         tmpdir,
-        display_rows=[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}],
-        click_rows=[{"key": OTHER_KEY, "value": CLICK, "ts": _ts(0.5)}],
+        display_batches=[[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
+        click_batches=[[{"key": OTHER_KEY, "value": CLICK, "ts": _ts(0.5)}]],
+    )
+    assert clicked == []
+    assert missed == [(KEY, DISPLAY)]
+
+
+def test_out_of_order_click_joins(spark, tmpdir):
+    """A click in an earlier micro-batch than its display, inside the
+    lateness: the click waits in join state, the display joins it on
+    arrival, and the display is not reported missed."""
+    clicked, missed = _run_scenario(
+        spark,
+        tmpdir,
+        display_batches=[[], [{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
+        click_batches=[[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}], []],
+    )
+    assert clicked == [(KEY, JOINED)]
+    assert missed == []
+
+
+def test_too_late_click_dropped_display_missed(spark, tmpdir):
+    """A click arriving after a flush moved the watermark past d.ts + W is
+    dropped as late data: no clicked row, and the display is reported
+    missed even though the click is inside its band (the false "missed"
+    row a dropped late click becomes).
+
+    Spark drops late rows by the PREVIOUS batch's watermark, so a click in
+    the batch right after the flush still joins; the empty batch between
+    puts the click two batches after the flush."""
+    clicked, missed = _run_scenario(
+        spark,
+        tmpdir,
+        display_batches=[
+            [{"key": KEY, "value": DISPLAY, "ts": _ts(0)}], _flush(0, 10.0), [], [],
+        ],
+        click_batches=[
+            [], _flush(0, 10.0), [], [{"key": KEY, "value": CLICK, "ts": _ts(0.5)}],
+        ],
     )
     assert clicked == []
     assert missed == [(KEY, DISPLAY)]
@@ -138,4 +184,37 @@ def test_scenario4_shifter_event_time(spark, tmpdir):
         q.stop()
     assert [(r["key"], r["value"], r["ts"]) for r in rows] == [
         (KEY, DISPLAY, T0 + dt.timedelta(seconds=1))
+    ]
+
+
+def test_delayed_delivery_writer_holds_batch(spark, tmpdir):
+    """TopicShifterTest.scala:13-43, wall-clock form: the writer delivers
+    the micro-batch unchanged, no earlier than max(ts) + Δ."""
+    delta_s = 1.0
+    src = FileStream(spark, tmpdir, "input")
+    # a long-past first batch is delivered at once and warms the query, so
+    # the timed batch below is not slowed down by query start-up
+    src.add_batch(_flush(0, 0.0))
+    delivered = []
+
+    def writer_fn(batch_df):
+        delivered.append((time.time(), [tuple(r) for r in batch_df.collect()]))
+
+    q = (
+        src.df().writeStream.foreachBatch(DelayedDeliveryWriter(delta_s, writer_fn))
+        .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
+        .start()
+    )
+    try:
+        drain_until_ingested(q, 1)
+        ts = dt.datetime.now(dt.timezone.utc) + dt.timedelta(seconds=1)
+        src.add_batch([{"key": KEY, "value": DISPLAY, "ts": ts.strftime("%Y-%m-%dT%H:%M:%S.%f")}])
+        drain_until_ingested(q, 2)
+    finally:
+        q.stop()
+    assert len(delivered) == 2
+    at, rows = delivered[1]
+    assert at >= ts.timestamp() + delta_s
+    assert [(k, v, t.timestamp()) for k, v, t in rows] == [
+        (KEY, DISPLAY, pytest.approx(ts.timestamp(), abs=1e-6))
     ]
