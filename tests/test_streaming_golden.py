@@ -12,6 +12,8 @@ playing the role of the ongoing traffic a live pipeline always has.
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import json
 import os
 import shutil
 import tempfile
@@ -29,6 +31,7 @@ from kafka_streams_join_spark.streaming.shifter import (
     DelayedDeliveryWriter,
     shift_stream,
 )
+from kafka_streams_join_spark.streaming.sinks import IdempotentParquetWriter
 from kafka_streams_join_spark.streaming.topology import TimeoutJoinTopology
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -37,6 +40,9 @@ OTHER_KEY = "9750c569-44c2-49e6-854e-01e0eae04bb6"
 DISPLAY = '{"type":"display"}'
 CLICK = '{"type":"click"}'
 JOINED = '{"display":{"type":"display"},"click":{"type":"click"}}'
+JOIN_STATE_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 def _ts(delta_s: float = 0.0) -> str:
@@ -45,6 +51,39 @@ def _ts(delta_s: float = 0.0) -> str:
 
 def _flush(n: int, offset_s: float) -> list[dict]:
     return [{"key": f"flush-{n}", "value": "{}", "ts": _ts(offset_s)}]
+
+
+# Scenarios as (display_batches, click_batches). In both, the first
+# micro-batch leaves a row in join state that a later batch needs.
+# A click one micro-batch before its display, inside the lateness:
+OUT_OF_ORDER = (
+    [[], [{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
+    [[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}], []],
+)
+# a click two micro-batches after a flush moved the watermark past d.ts + W:
+TOO_LATE = (
+    [[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}], _flush(0, 10.0), [], []],
+    [[], _flush(0, 10.0), [], [{"key": KEY, "value": CLICK, "ts": _ts(0.5)}]],
+)
+SCENARIO_KEYS = {KEY, OTHER_KEY}
+
+
+def _offset_confs(checkpoint: str) -> dict[int, dict]:
+    """Session settings the query recorded in each offset-log entry, by
+    batch ID (line 2 of ``offsets/<N>`` is the batch metadata JSON)."""
+    confs = {}
+    for path in glob.glob(os.path.join(checkpoint, "offsets", "[0-9]*")):
+        with open(path) as f:
+            confs[int(os.path.basename(path))] = json.loads(f.readlines()[1])["conf"]
+    return confs
+
+
+def _feed_flushes(*streams: FileStream) -> None:
+    """Two watermark flushes on every stream (the global watermark is the
+    min across inputs)."""
+    for n, off in ((1, 3600.0), (2, 7200.0)):
+        for stream in streams:
+            stream.add_batch(_flush(n, off))
 
 
 @pytest.fixture()
@@ -64,11 +103,7 @@ def _run_scenario(spark, tmpdir, display_batches, click_batches):
     for d_rows, c_rows in zip(display_batches, click_batches):
         displays.add_batch(d_rows)
         clicks.add_batch(c_rows)
-    # then two watermark flushes on BOTH streams (global watermark is the
-    # min across inputs)
-    for n, off in ((1, 3600.0), (2, 7200.0)):
-        displays.add_batch(_flush(n, off))
-        clicks.add_batch(_flush(n, off))
+    _feed_flushes(displays, clicks)
 
     topo = TimeoutJoinTopology(window="1 second")
     d_df, c_df = displays.df(), clicks.df()
@@ -86,10 +121,9 @@ def _run_scenario(spark, tmpdir, display_batches, click_batches):
     finally:
         clicked_q.stop()
         missed_q.stop()
-    scenario_keys = {KEY, OTHER_KEY}
     return (
-        [(r["key"], r["value"]) for r in clicked if r["key"] in scenario_keys],
-        [(r["key"], r["value"]) for r in missed if r["key"] in scenario_keys],
+        [(r["key"], r["value"]) for r in clicked if r["key"] in SCENARIO_KEYS],
+        [(r["key"], r["value"]) for r in missed if r["key"] in SCENARIO_KEYS],
     )
 
 
@@ -136,12 +170,7 @@ def test_out_of_order_click_joins(spark, tmpdir):
     """A click in an earlier micro-batch than its display, inside the
     lateness: the click waits in join state, the display joins it on
     arrival, and the display is not reported missed."""
-    clicked, missed = _run_scenario(
-        spark,
-        tmpdir,
-        display_batches=[[], [{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
-        click_batches=[[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}], []],
-    )
+    clicked, missed = _run_scenario(spark, tmpdir, *OUT_OF_ORDER)
     assert clicked == [(KEY, JOINED)]
     assert missed == []
 
@@ -155,18 +184,89 @@ def test_too_late_click_dropped_display_missed(spark, tmpdir):
     Spark drops late rows by the PREVIOUS batch's watermark, so a click in
     the batch right after the flush still joins; the empty batch between
     puts the click two batches after the flush."""
-    clicked, missed = _run_scenario(
-        spark,
-        tmpdir,
-        display_batches=[
-            [{"key": KEY, "value": DISPLAY, "ts": _ts(0)}], _flush(0, 10.0), [], [],
-        ],
-        click_batches=[
-            [], _flush(0, 10.0), [], [{"key": KEY, "value": CLICK, "ts": _ts(0.5)}],
-        ],
-    )
+    clicked, missed = _run_scenario(spark, tmpdir, *TOO_LATE)
     assert clicked == []
     assert missed == [(KEY, DISPLAY)]
+
+
+def test_checkpoints_record_rocksdb_join_state_v3(spark, tmpdir):
+    """Both join queries of a fresh golden run keep their state in RocksDB
+    with join state format v3 (one RocksDB instance per partition), as
+    recorded in the metadata of the first offset-log entry."""
+    clicked, missed = _run_scenario(spark, tmpdir, *OUT_OF_ORDER)
+    assert (clicked, missed) == ([(KEY, JOINED)], [])
+    checkpoints = glob.glob(os.path.join(tmpdir, "sink_*"))
+    assert len(checkpoints) == 2
+    for checkpoint in checkpoints:
+        conf = _offset_confs(checkpoint)[0]
+        assert conf[JOIN_STATE_FORMAT] == "3"
+        assert conf[PROVIDER] == ROCKSDB
+
+
+@pytest.mark.parametrize(
+    "scenario, want_clicked, want_missed",
+    [(OUT_OF_ORDER, [(KEY, JOINED)], []), (TOO_LATE, [], [(KEY, DISPLAY)])],
+    ids=["out_of_order", "too_late"],
+)
+def test_restart_keeps_join_state_v2_checkpoint(
+    spark, tmpdir, scenario, want_clicked, want_missed
+):
+    """A checkpoint written with join state format v2 resumes under the v3
+    session default: both queries run the first micro-batch on v2 and stop,
+    then restart from their checkpoints into an exactly-once sink for the
+    remaining batches and the flushes. The output is the scenario's, with
+    no row lost or duplicated, and the resumed queries stay on v2."""
+    display_batches, click_batches = scenario
+    displays = FileStream(spark, tmpdir, "displays")
+    clicks = FileStream(spark, tmpdir, "clicks")
+    topo = TimeoutJoinTopology(window="1 second")
+    outputs = {"clicked": topo.clicked_displays, "missed": topo.missed_displays}
+
+    def run_until_idle() -> None:
+        d_df, c_df = displays.df(), clicks.df()
+        queries = [
+            fn(d_df, c_df).writeStream
+            .foreachBatch(IdempotentParquetWriter(os.path.join(tmpdir, "out", name)))
+            .option("checkpointLocation", os.path.join(tmpdir, "ckpt", name))
+            .start()
+            for name, fn in outputs.items()
+        ]
+        try:
+            for q in queries:
+                q.processAllAvailable()
+        finally:
+            for q in queries:
+                q.stop()
+
+    displays.add_batch(display_batches[0])
+    clicks.add_batch(click_batches[0])
+    session_default = spark.conf.get(JOIN_STATE_FORMAT)
+    spark.conf.set(JOIN_STATE_FORMAT, "2")
+    try:
+        run_until_idle()
+    finally:
+        spark.conf.set(JOIN_STATE_FORMAT, session_default)
+    assert session_default == "3"
+
+    for d_rows, c_rows in zip(display_batches[1:], click_batches[1:]):
+        displays.add_batch(d_rows)
+        clicks.add_batch(c_rows)
+    _feed_flushes(displays, clicks)
+    run_until_idle()
+
+    got = {}
+    for name in outputs:
+        confs = _offset_confs(os.path.join(tmpdir, "ckpt", name))
+        assert max(confs) > 0, f"{name} never resumed past its first batch"
+        assert {conf[JOIN_STATE_FORMAT] for conf in confs.values()} == {"2"}
+        rows = (
+            spark.read.schema("key STRING, value STRING")
+            .parquet(os.path.join(tmpdir, "out", name)).collect()
+        )
+        got[name] = sorted(
+            (r["key"], r["value"]) for r in rows if r["key"] in SCENARIO_KEYS
+        )
+    assert got == {"clicked": want_clicked, "missed": want_missed}
 
 
 def test_scenario4_shifter_event_time(spark, tmpdir):
