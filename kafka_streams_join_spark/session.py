@@ -62,14 +62,16 @@ def get_spark(
 
     On a real cluster, ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``, and shuffle partitions default to the
-    same core count.
+    same core count. ``SPARK_GRAFT_CPUS`` defaults to the cores this process
+    may run on.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Python workers (incl. the transformWithStateInPandas driver worker,
-    # which unpickles StatefulProcessor classes by module reference) must be
-    # able to import this package. Locally that means the repo root on
-    # PYTHONPATH before the JVM forks workers; on a cluster the same thing
-    # is done by shipping a wheel via --py-files.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    # Python workers unpickle the streaming monitors' applyInPandasWithState
+    # functions (streaming/anomaly.py, control_rules.py, countmin.py, ...)
+    # by module reference, so they must be able to import this package.
+    # Locally that means the repo root on PYTHONPATH before the JVM forks
+    # workers; on a cluster the same thing is done by shipping a wheel via
+    # --py-files.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if repo_root not in existing.split(os.pathsep):

@@ -41,8 +41,8 @@ class DelayedDeliveryWriter:
     reference's demo shifter. The per-batch ``collect()`` of the 1-row max
     aggregate is driver-side O(1), but the deliberate sleep stalls the whole
     micro-batch pipeline — real pipelines express delay with watermarks
-    (``stream_timeout_join``) or event-time timers (``stream_timeout_timer``),
-    which keep the delay declarative and the executors busy.
+    (``stream_timeout_join``), which keep the delay declarative and the
+    executors busy.
     """
 
     def __init__(self, delta_seconds: float, writer_fn) -> None:

@@ -1,155 +1,13 @@
-"""Custom stateful streaming operators (SURVEY §2.3 J3 option b, §2.6).
+"""Streaming exact dedup (SURVEY §2.6).
 
-The watermarked outer join in ``topology.stream_timeout_join`` reproduces the
-reference's *composition* (leftJoin → isEmpty filter → mapValues,
-``TimeoutJoinTest.scala:82-91``). This module is the exactness upgrade the
-reference's TopicShifter was reaching for: per-key **event-time timeouts**
-that fire at ``display_ts + W`` (``TopicShifter.scala:28-35`` delays delivery
-by Δ=W so the join evaluates only once the window has elapsed — a hand-rolled
-timer). ``applyInPandasWithState`` with ``EventTimeTimeout`` gives the same
-"emit at t + W if no click was seen" semantics natively. (Spark 4.x's
-``transformWithStateInPandas`` is the successor API with true multi-timer
-support, but its state server requires protobuf, absent from this
-environment — the GroupState path below is dependency-free and semantically
-equivalent: one timeout per key, tracking the minimum pending expiry.)
-
-Scale notes: state is per-key in the state store (RocksDB-backed on a real
-cluster), shuffled once on the grouping key; both pending displays and
-recent clicks are evicted by watermark, so state is bounded by
-(arrival-rate × W) per key regardless of total data size. Arrow batches
-cross the Python boundary — the documented slow-but-necessary path for
-semantics built-in operators can't express (the only Python on any
-streaming hot path in this repo).
+Absence detection (J3) is not here: ``topology.stream_timeout_join`` is the
+package's one streaming absence detector, a watermarked outer join on
+Spark's built-in stream-stream join operator.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState
-
-OUTPUT_SCHEMA = "key string, value string, ts timestamp"
-STATE_SCHEMA = (
-    "pending array<struct<value:string,ts_ms:bigint>>,"
-    " clicks array<struct<value:string,ts_ms:bigint>>"
-)
-
-_UNIT_MS = {
-    "millisecond": 1, "milliseconds": 1,
-    "second": 1000, "seconds": 1000,
-    "minute": 60_000, "minutes": 60_000,
-    "hour": 3_600_000, "hours": 3_600_000,
-}
-
-
-def window_to_ms(window: str) -> int:
-    amount, unit = window.split()
-    return int(float(amount) * _UNIT_MS[unit])
-
-
-def _timeout_fn(window_ms: int):
-    """The per-key state machine: buffer displays, cancel on in-window
-    clicks, emit un-clicked displays once the watermark passes ts + W."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pending: list[tuple[str, int]] = []
-        clicks: list[tuple[str, int]] = []
-        if state.exists:
-            saved_pending, saved_clicks = state.get
-            pending = [(r[0], r[1]) for r in (saved_pending or [])]
-            clicks = [(r[0], r[1]) for r in (saved_clicks or [])]
-
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                # normalize to ms regardless of the incoming resolution
-                # (ns vs us depends on the Arrow/pandas version)
-                ts_ms = pdf["ts"].astype("datetime64[ms]").astype("int64").tolist()
-                for side, value, t in zip(pdf["side"], pdf["value"], ts_ms):
-                    (pending if side == "display" else clicks).append((value, t))
-        # a click at ct cancels pending displays with ts <= ct <= ts + W —
-        # symmetric buffering, so cross-batch disorder (click before its
-        # display) still cancels
-        click_ts = [t for _, t in clicks]
-        pending = [
-            (v, t)
-            for v, t in pending
-            if not any(t <= ct <= t + window_ms for ct in click_ts)
-        ]
-
-        wm = state.getCurrentWatermarkMs()
-        due = [(v, t) for v, t in pending if t + window_ms <= wm]
-        pending = [(v, t) for v, t in pending if t + window_ms > wm]
-        # clicks older than wm - W can't cancel anything still pending:
-        # every live display has ts + W > wm, a matching click needs ct >= ts
-        clicks = [(v, t) for v, t in clicks if t > wm - window_ms]
-
-        if pending or clicks:
-            state.update((pending, clicks))
-            if pending:
-                # fire when the watermark passes the earliest pending expiry
-                # (must be strictly ahead of the current watermark)
-                state.setTimeoutTimestamp(
-                    max(min(t + window_ms for _, t in pending), wm + 1)
-                )
-            else:
-                # click-only keys must also self-evict: with no timeout the
-                # buffered clicks would outlive the watermark whenever no
-                # further record arrives for the key — unbounded state growth
-                # in the number of click-only keys. Fire once every click has
-                # aged past cancel-eligibility; the timed-out invocation finds
-                # pending and (post-prune) clicks empty and removes the state.
-                state.setTimeoutTimestamp(
-                    max(max(t for _, t in clicks) + window_ms, wm + 1)
-                )
-        elif state.exists:
-            state.remove()
-
-        if due:
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(due),
-                    "value": [v for v, _ in due],
-                    "ts": pd.to_datetime([t for _, t in due], unit="ms"),
-                }
-            )
-
-    return fn
-
-
-def stream_timeout_timer(
-    displays: DataFrame,
-    clicks: DataFrame,
-    window: str = "1 second",
-    watermark_delay: str | None = None,
-) -> DataFrame:
-    """J3 with per-key event-time timeouts: tag + union the two streams,
-    group by key, run the state machine from :func:`_timeout_fn`.
-
-    Output: (key, value, ts) of each display with no click in [ts, ts + W],
-    emitted when the watermark passes ts + W — the reference's
-    MissedDisplayTopic with the TopicShifter replaced by real timeouts.
-    """
-    tagged = (
-        displays.select("key", "value", "ts", F.lit("display").alias("side"))
-        .unionByName(clicks.select("key", "value", "ts", F.lit("click").alias("side")))
-        .withWatermark("ts", watermark_delay or window)
-    )
-    return tagged.groupBy("key").applyInPandasWithState(
-        _timeout_fn(window_to_ms(window)),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
-    )
 
 
 def stream_dedup(

@@ -40,6 +40,8 @@ OTHER_KEY = "9750c569-44c2-49e6-854e-01e0eae04bb6"
 DISPLAY = '{"type":"display"}'
 CLICK = '{"type":"click"}'
 JOINED = '{"display":{"type":"display"},"click":{"type":"click"}}'
+SECOND_DISPLAY = '{"type":"display","n":2}'
+SECOND_JOINED = '{"display":{"type":"display","n":2},"click":{"type":"click"}}'
 JOIN_STATE_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
 PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -53,9 +55,15 @@ def _flush(n: int, offset_s: float) -> list[dict]:
     return [{"key": f"flush-{n}", "value": "{}", "ts": _ts(offset_s)}]
 
 
-# Scenarios as (display_batches, click_batches). In both, the first
-# micro-batch leaves a row in join state that a later batch needs.
-# A click one micro-batch before its display, inside the lateness:
+# Scenarios as (display_batches, click_batches).
+# Scenario 3: an in-window click on another key:
+UNRELATED_CLICK = (
+    [[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
+    [[{"key": OTHER_KEY, "value": CLICK, "ts": _ts(0.5)}]],
+)
+# In the next two, the first micro-batch leaves a row in join state that a
+# later batch needs. A click one micro-batch before its display, inside the
+# lateness:
 OUT_OF_ORDER = (
     [[], [{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
     [[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}], []],
@@ -66,6 +74,10 @@ TOO_LATE = (
     [[], _flush(0, 10.0), [], [{"key": KEY, "value": CLICK, "ts": _ts(0.5)}]],
 )
 SCENARIO_KEYS = {KEY, OTHER_KEY}
+# Join state rows after the last flush: the display and the click of the
+# final flush, both still inside the band of the watermark it set. A
+# watermark delay of 1 hour would also keep the first flush's two rows.
+FINAL_FLUSH_STATE_ROWS = 2
 
 
 def _offset_confs(checkpoint: str) -> dict[int, dict]:
@@ -93,10 +105,11 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _run_scenario(spark, tmpdir, display_batches, click_batches):
+def _run_topology(spark, tmpdir, display_batches, click_batches):
     """Build the full topology, feed the scenario's micro-batches (one list
     of rows per batch, batch i of both streams in micro-batch i) + flush
-    batches, drain, read both output sinks."""
+    batches, drain, read both output sinks. Returns the clicked and missed
+    rows, and each query's last progress by output name."""
     assert len(display_batches) == len(click_batches)
     displays = FileStream(spark, tmpdir, "displays")
     clicks = FileStream(spark, tmpdir, "clicks")
@@ -124,7 +137,14 @@ def _run_scenario(spark, tmpdir, display_batches, click_batches):
     return (
         [(r["key"], r["value"]) for r in clicked if r["key"] in SCENARIO_KEYS],
         [(r["key"], r["value"]) for r in missed if r["key"] in SCENARIO_KEYS],
+        {"clicked": clicked_q.lastProgress, "missed": missed_q.lastProgress},
     )
+
+
+def _run_scenario(spark, tmpdir, display_batches, click_batches):
+    """The clicked and missed rows of :func:`_run_topology`."""
+    clicked, missed, _ = _run_topology(spark, tmpdir, display_batches, click_batches)
+    return clicked, missed
 
 
 def test_scenario1_click_inside_window(spark, tmpdir):
@@ -156,14 +176,38 @@ def test_scenario2_click_outside_window(spark, tmpdir):
 def test_scenario3_unrelated_click(spark, tmpdir):
     """TimeoutJoinTest.scala:146-164: same-window click with a different key
     → key equality is part of the join predicate."""
+    clicked, missed = _run_scenario(spark, tmpdir, *UNRELATED_CLICK)
+    assert clicked == []
+    assert missed == [(KEY, DISPLAY)]
+
+
+def test_two_displays_one_key(spark, tmpdir):
+    """Two displays of one key, 5 s apart, and one click 0.5 s after the
+    second: the click joins only the second display, and only the first
+    is reported missed."""
     clicked, missed = _run_scenario(
         spark,
         tmpdir,
-        display_batches=[[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}]],
-        click_batches=[[{"key": OTHER_KEY, "value": CLICK, "ts": _ts(0.5)}]],
+        display_batches=[[
+            {"key": KEY, "value": DISPLAY, "ts": _ts(0)},
+            {"key": KEY, "value": SECOND_DISPLAY, "ts": _ts(5)},
+        ]],
+        click_batches=[[{"key": KEY, "value": CLICK, "ts": _ts(5.5)}]],
     )
-    assert clicked == []
+    assert clicked == [(KEY, SECOND_JOINED)]
     assert missed == [(KEY, DISPLAY)]
+
+
+def test_click_only_key_state_is_bounded(spark, tmpdir):
+    """Scenario 3's click on OTHER_KEY never matches a display. Once the
+    flushes move the watermark past it, the join evicts it: each query's
+    one stateful operator, the stream-stream join, holds only the rows
+    that the final flush still keeps in state."""
+    clicked, missed, progress = _run_topology(spark, tmpdir, *UNRELATED_CLICK)
+    assert (clicked, missed) == ([], [(KEY, DISPLAY)])
+    for name, last in progress.items():
+        ops = [(op.operatorName, op.numRowsTotal) for op in last.stateOperators]
+        assert ops == [("symmetricHashJoin", FINAL_FLUSH_STATE_ROWS)], name
 
 
 def test_out_of_order_click_joins(spark, tmpdir):

@@ -1,8 +1,5 @@
-"""Golden scenarios against the timer-based timeout operator (J3 option b,
-SURVEY §2.3) and the streaming dedup — same fixtures as
-``test_streaming_golden.py`` but exercising per-key event-time timers
-(``transformWithStateInPandas``) instead of the outer-join composition.
-"""
+"""Streaming exact dedup (``streaming/stateful.py``). The timeout join's
+golden scenarios live in ``test_streaming_golden.py``."""
 
 from __future__ import annotations
 
@@ -17,16 +14,11 @@ from kafka_streams_join_spark.streaming.harness import (
     read_until,
     start_memory_sink,
 )
-from kafka_streams_join_spark.streaming.stateful import (
-    stream_dedup,
-    stream_timeout_timer,
-)
+from kafka_streams_join_spark.streaming.stateful import stream_dedup
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 KEY = "0f1f53a0-44f5-4b84-9699-fe853c90ed1c"
 OTHER_KEY = "9750c569-44c2-49e6-854e-01e0eae04bb6"
-DISPLAY = '{"type":"display"}'
-CLICK = '{"type":"click"}'
 
 
 def _ts(delta_s: float = 0.0) -> str:
@@ -38,97 +30,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="stream_stateful_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def _run_timer_scenario(spark, tmpdir, display_rows, click_rows, expect):
-    displays = FileStream(spark, tmpdir, "displays")
-    clicks = FileStream(spark, tmpdir, "clicks")
-    displays.add_batch(display_rows)
-    clicks.add_batch(click_rows)
-    # future-dated flushes advance the watermark past every timer
-    for n, off in ((1, 3600.0), (2, 7200.0), (3, 10800.0)):
-        displays.add_batch([{"key": f"flush-{n}", "value": "{}", "ts": _ts(off)}])
-        clicks.add_batch([{"key": f"flush-{n}", "value": "{}", "ts": _ts(off)}])
-
-    missed = stream_timeout_timer(displays.df(), clicks.df(), window="1 second")
-    q, sink = start_memory_sink(missed, checkpoint_root=tmpdir)
-    try:
-        q.processAllAvailable()
-        # expect=0 waits out the FULL deadline to assert emptiness — keep
-        # that short; positive expectations return on arrival, so a long
-        # deadline only pays on genuine loss (loaded-run flake hardening)
-        rows = read_until(
-            spark, sink, expect=expect, wait_s=30.0 if expect else 3.0
-        )
-    finally:
-        q.stop()
-    return [
-        (r["key"], r["value"], r["ts"]) for r in rows if r["key"] in {KEY, OTHER_KEY}
-    ]
-
-
-def test_timer_scenario1_click_inside_window(spark, tmpdir):
-    """Click at t+0.5 inside [t, t+1] cancels the timer — no missed row."""
-    out = _run_timer_scenario(
-        spark,
-        tmpdir,
-        display_rows=[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}],
-        click_rows=[{"key": KEY, "value": CLICK, "ts": _ts(0.5)}],
-        expect=0,
-    )
-    assert out == []
-
-
-def test_timer_scenario2_click_outside_window(spark, tmpdir):
-    """Click at t+2 misses [t, t+1] — the display fires at t+W with its
-    original value and event time."""
-    out = _run_timer_scenario(
-        spark,
-        tmpdir,
-        display_rows=[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}],
-        click_rows=[{"key": KEY, "value": CLICK, "ts": _ts(2.0)}],
-        expect=1,
-    )
-    assert out == [(KEY, DISPLAY, T0)]
-
-
-def test_timer_scenario3_unrelated_click(spark, tmpdir):
-    """In-window click under a different key never reaches this key's state
-    (grouping IS the key predicate)."""
-    out = _run_timer_scenario(
-        spark,
-        tmpdir,
-        display_rows=[{"key": KEY, "value": DISPLAY, "ts": _ts(0)}],
-        click_rows=[{"key": OTHER_KEY, "value": CLICK, "ts": _ts(0.5)}],
-        expect=1,
-    )
-    assert out == [(KEY, DISPLAY, T0)]
-
-
-def test_timer_out_of_order_click_before_display(spark, tmpdir):
-    """A click that ARRIVES a batch before its display still cancels it —
-    the symmetric click buffer handles cross-batch disorder the reference's
-    wall-clock shifter papers over."""
-    displays = FileStream(spark, tmpdir, "displays")
-    clicks = FileStream(spark, tmpdir, "clicks")
-    # batch 0: the click (event time t+0.5) arrives first
-    displays.add_batch([])
-    clicks.add_batch([{"key": KEY, "value": CLICK, "ts": _ts(0.5)}])
-    # batch 1: the display (event time t) arrives late but within watermark
-    displays.add_batch([{"key": KEY, "value": DISPLAY, "ts": _ts(0)}])
-    clicks.add_batch([])
-    for n, off in ((1, 3600.0), (2, 7200.0), (3, 10800.0)):
-        displays.add_batch([{"key": f"flush-{n}", "value": "{}", "ts": _ts(off)}])
-        clicks.add_batch([{"key": f"flush-{n}", "value": "{}", "ts": _ts(off)}])
-
-    missed = stream_timeout_timer(displays.df(), clicks.df(), window="1 second")
-    q, sink = start_memory_sink(missed, checkpoint_root=tmpdir)
-    try:
-        q.processAllAvailable()
-        rows = read_until(spark, sink, expect=0, wait_s=3.0)
-    finally:
-        q.stop()
-    assert [r for r in rows if r["key"] == KEY] == []
 
 
 def test_stream_dedup_within_watermark(spark, tmpdir):
@@ -158,45 +59,3 @@ def test_stream_dedup_within_watermark(spark, tmpdir):
         (KEY, "v1"),
         (OTHER_KEY, "w1"),
     ]
-
-
-def test_click_only_key_registers_cleanup_timeout():
-    """A key that has seen only clicks must still register a timeout, so the
-    buffered-click state self-evicts once no display can still match —
-    otherwise state grows with the number of click-only keys forever."""
-    import pandas as pd
-
-    from kafka_streams_join_spark.streaming.stateful import _timeout_fn
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-
-        def __init__(self):
-            self.timeout_ms = None
-            self.updated = None
-            self.removed = False
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def update(self, v):
-            self.updated = v
-
-        def setTimeoutTimestamp(self, t):
-            self.timeout_ms = t
-
-        def remove(self):
-            self.removed = True
-
-    fn = _timeout_fn(1000)
-    click_ts = pd.Timestamp("2024-01-01T00:00:05")
-    pdf = pd.DataFrame(
-        {"side": ["click"], "value": [CLICK], "ts": pd.to_datetime([click_ts])}
-    )
-    st = FakeState()
-    out = list(fn((KEY,), iter([pdf]), st))
-    assert out == []  # nothing emitted for a click-only key
-    assert st.updated is not None  # click buffered (may cancel a late display)
-    # cleanup fires once the click can no longer cancel anything: ts + W
-    assert st.timeout_ms == click_ts.value // 1_000_000 + 1000

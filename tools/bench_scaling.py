@@ -283,7 +283,7 @@ def run_cores_one(spark, reps: int, skip_gen: bool, out_path: str) -> int:
         amplify(spark, SF01, SF1, 10)
     times = _time_queries(spark, SF1, reps, only=set(TOP10))
     artifact = {
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))),
         "sf_dir": SF1,
         "reps": reps,
         "times": {k: round(v, 2) for k, v in times.items()},
