@@ -210,6 +210,22 @@ def test_click_only_key_state_is_bounded(spark, tmpdir):
         assert ops == [("symmetricHashJoin", FINAL_FLUSH_STATE_ROWS)], name
 
 
+def test_click_only_key_self_evicts(spark, tmpdir):
+    """A key that only ever sees a click, with no display anywhere in the
+    scenario: neither output gets a row for it, and once the flushes move
+    the watermark past the click, the join evicts it from state."""
+    clicked, missed, progress = _run_topology(
+        spark,
+        tmpdir,
+        display_batches=[[]],
+        click_batches=[[{"key": KEY, "value": CLICK, "ts": _ts(0)}]],
+    )
+    assert (clicked, missed) == ([], [])
+    for name, last in progress.items():
+        ops = [(op.operatorName, op.numRowsTotal) for op in last.stateOperators]
+        assert ops == [("symmetricHashJoin", FINAL_FLUSH_STATE_ROWS)], name
+
+
 def test_out_of_order_click_joins(spark, tmpdir):
     """A click in an earlier micro-batch than its display, inside the
     lateness: the click waits in join state, the display joins it on
