@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .streaming.listener import LISTENER
+
 # Stateful streaming settings, pinned together. Join state format v3 keeps
 # a stream-stream join's four state stores (keyToNumValues and
 # keyWithIndexToValue for each side) as column families of ONE RocksDB
@@ -55,7 +57,6 @@ def _kafka_connector_coordinate() -> str:
 def get_spark(
     app_name: str = "kafka_streams_join_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
@@ -63,7 +64,8 @@ def get_spark(
     On a real cluster, ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``, and shuffle partitions default to the
     same core count. ``SPARK_GRAFT_CPUS`` defaults to the cores this process
-    may run on.
+    may run on; ``extra_conf`` overrides any setting. Every session carries
+    the package's ``streaming.listener.LISTENER``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     # Python workers unpickle the streaming monitors' applyInPandasWithState
@@ -93,10 +95,7 @@ def get_spark(
         )
     builder = (
         builder
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or cpus),
-        )
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -112,4 +111,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LISTENER.install(spark)
     return spark

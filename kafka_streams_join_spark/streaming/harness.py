@@ -12,8 +12,10 @@ time), and watermark-driven outer-join emission happens in the batch AFTER
 the watermark passes — tests append future-dated flush batches to drive
 eviction, mirroring how a live pipeline's ongoing traffic does it.
 
-``read_until`` reproduces the reference's read-until-N-or-deadline idiom
-(``KafkaUtils.scala:88-91``) against the memory sink.
+The reference's consumer polls until N rows or a deadline
+(``KafkaUtils.scala:70-94``). Here ``processAllAvailable`` returns only
+once every available micro-batch is committed to the sink, and a batch's
+output is final when it commits, so callers read the memory sink directly.
 """
 
 from __future__ import annotations
@@ -24,8 +26,10 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from .listener import LISTENER
 
 RECORD_SCHEMA = "key STRING, value STRING, ts TIMESTAMP"
 
@@ -86,51 +90,20 @@ def start_memory_sink(
     return writer.start(), sink
 
 
-def _progress_dict(p) -> dict:
-    """recentProgress entries are dicts in some PySpark versions and
-    StreamingQueryProgress objects in others — normalize."""
-    if isinstance(p, dict):
-        return p
-    if isinstance(p, str):
-        return json.loads(p)
-    return json.loads(p.json)
-
-
 def drain_until_ingested(
     query: StreamingQuery, total_rows: int, wait_s: float = 120.0
 ) -> None:
     """``processAllAvailable``, then a loud check that the query ingested
-    every expected input row: ``total_rows`` cumulative input rows, summed
-    over the query's progress events. Re-triggers until the input-row
-    ledger reaches that total, and raises ``TimeoutError`` if it has not
-    after ``wait_s``, so a batch the source never read fails the caller
-    instead of passing as an empty result."""
+    every expected input row: ``total_rows`` cumulative input rows of this
+    run, as counted by the session's ``listener.LISTENER``. Re-triggers
+    until the count reaches that total (listener events arrive
+    asynchronously), and raises ``TimeoutError`` if it has not after
+    ``wait_s``, so a batch the source never read fails the caller instead
+    of passing as an empty result."""
     deadline = time.time() + wait_s
-    # Cumulative ledger keyed by batchId: ``recentProgress`` is a ring
-    # buffer capped at spark.sql.streaming.numRecentProgressUpdates
-    # (default 100) entries, so re-summing the buffer each poll silently
-    # undercounts any query that exceeds 100 batches (ADVICE r8). Folding
-    # every batch seen into a dict counts each batch exactly once and
-    # survives the ring buffer evicting old entries — a batch only needs
-    # to be OBSERVED once, and the poll loop runs far faster than batches
-    # complete. The ledger lives ON the query handle, not in this call:
-    # callers drain repeatedly with CUMULATIVE totals (batch 2, 4, 5, …),
-    # and a per-call dict would re-lose every batch evicted between calls
-    # — the same bug one level up. Entries without a batchId (version-
-    # dependent progress shapes) key on their timestamp, else their full
-    # JSON, so distinct batches never collapse onto one key.
-    ledger_attr = "_spark_graft_ingest_ledger"
-    ingested_by_batch: dict = getattr(query, ledger_attr, None) or {}
-    setattr(query, ledger_attr, ingested_by_batch)
     while True:
         query.processAllAvailable()
-        for p in query.recentProgress:
-            d = _progress_dict(p)
-            key = d.get("batchId")
-            if key is None:
-                key = d.get("timestamp") or json.dumps(d, sort_keys=True)
-            ingested_by_batch[key] = int(d.get("numInputRows") or 0)
-        ingested = sum(ingested_by_batch.values())
+        ingested = LISTENER.ingested_rows(query)
         if ingested >= total_rows:
             return
         if time.time() >= deadline:
@@ -139,20 +112,3 @@ def drain_until_ingested(
                 f"{ingested}/{total_rows} input rows in {wait_s}s"
             )
         time.sleep(0.2)
-
-
-def read_until(
-    spark: SparkSession, sink: str, expect: int, wait_s: float = 5.0
-) -> list[Row]:
-    """Poll the memory sink until ≥ ``expect`` rows or deadline — the
-    reference's consumer idiom (fresh group, earliest, stop at expect/timeout,
-    ``KafkaUtils.scala:70-94``). ``expect=0`` waits out the full deadline to
-    assert emptiness (how the reference proves a topic stayed empty)."""
-    deadline = time.time() + wait_s
-    rows = spark.sql(f"SELECT * FROM {sink}").collect()
-    while len(rows) < expect or expect == 0:
-        if time.time() >= deadline:
-            break
-        time.sleep(0.1)
-        rows = spark.sql(f"SELECT * FROM {sink}").collect()
-    return rows

@@ -99,8 +99,8 @@ def read_batch_from_topic(
     spark: SparkSession, brokers: str, topic: str, cast_strings: bool = True
 ) -> DataFrame:
     """S8 — batch read from earliest (``KafkaUtils.readFromTopic``,
-    ``KafkaUtils.scala:70-94``); the poll-until-N-or-deadline idiom lives in
-    ``harness.read_until`` for sinks the tests can reach."""
+    ``KafkaUtils.scala:70-94``); its poll until N rows or a deadline has no
+    twin, as the file-harness tests read sinks after ``processAllAvailable``."""
     df = (
         spark.read.format("kafka")
         .option("kafka.bootstrap.servers", brokers)

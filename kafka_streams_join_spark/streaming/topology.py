@@ -45,24 +45,16 @@ def stream_interval_join(
     left_prefix: str = "l_",
     right_prefix: str = "r_",
     watermark_delay: str | None = None,
-    watermark_left: bool = True,
 ) -> DataFrame:
     """Streaming twin of ``operators.interval_join``: watermark both inputs
     by ``watermark_delay`` (default before+after, the band's full span),
     then apply the same equi+band join (``TimeoutJoinTest.scala:78,85``).
     The watermark tag survives the prefixing alias, so Spark derives the
-    state watermark from the band condition.
-
-    ``watermark_left=False`` is for CHAINED stateful pipelines: an input
-    that is itself the output of a watermarked join already carries a
-    propagated watermark, and redefining one is a Spark analysis error
-    (multiple-stateful-operator rule) — see ``stream_funnel``."""
+    state watermark from the band condition."""
     delay = watermark_delay or f"{window.before} {window.after}"
-    if watermark_left:
-        left = left.withWatermark(left_ts, delay)
     return interval_join(
-        left, right.withWatermark(right_ts, delay), on, window, how,
-        left_ts, right_ts, left_prefix, right_prefix,
+        left.withWatermark(left_ts, delay), right.withWatermark(right_ts, delay),
+        on, window, how, left_ts, right_ts, left_prefix, right_prefix,
     )
 
 
@@ -187,11 +179,12 @@ def stream_funnel(
         F.timestamp_micros(F.unix_micros(F.col("v_ts"))).alias("view_ts"),
         F.col("c_ts").alias("ts"),
     )
-    j2 = stream_interval_join(
-        mid, purchases, on=on, window=w, how="inner",
-        left_prefix="m_", right_prefix="p_",
-        # mid carries j1's propagated watermark; redefining it is an error
-        watermark_left=False,
+    # mid carries j1's propagated watermark, and redefining one on the
+    # output of a stateful operator is a Spark analysis error, so only
+    # purchases gets a watermark here
+    j2 = interval_join(
+        mid, purchases.withWatermark("ts", f"{w.before} {w.after}"), on, w,
+        "inner", left_prefix="m_", right_prefix="p_",
     )
     return j2.select(
         F.col(f"m_{on}").alias(on),

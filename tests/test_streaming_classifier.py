@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 from tests.conftest import SF_SMOKE
@@ -70,7 +69,7 @@ def test_stream_scoring_matches_batch_and_training(spark, tmpdir):
     q, sink = start_memory_sink(scored, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        out = read_until(spark, sink, expect=len(rows))
+        out = spark.table(sink).collect()
     finally:
         q.stop()
 

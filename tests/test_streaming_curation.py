@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 from tests.conftest import SF_SMOKE
@@ -78,7 +77,7 @@ def test_composed_stream_curation(spark, tmpdir):
     q, sink = start_memory_sink(deduped, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        out = read_until(spark, sink, expect=1, wait_s=30.0)
+        out = spark.table(sink).collect()
     finally:
         q.stop()
 

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 
@@ -75,7 +74,7 @@ def test_stream_probe_matches_static_benchmark(spark, tmpdir):
     q, sink = start_memory_sink(matched, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=2)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
 

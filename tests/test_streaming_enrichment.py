@@ -22,7 +22,6 @@ import pandas as pd
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 from kafka_streams_join_spark.streaming.topology import stream_table_join
@@ -60,7 +59,7 @@ def test_enrichment_inner_and_left_outer(spark, tmp_path):
     q, sink = start_memory_sink(inner, checkpoint_root=os.path.join(d, "c1"))
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=1, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     assert [(r["key"], r["value"], r["t_segment"]) for r in rows] == [
@@ -71,7 +70,7 @@ def test_enrichment_inner_and_left_outer(spark, tmp_path):
     q2, sink2 = start_memory_sink(left, checkpoint_root=os.path.join(d, "c2"))
     try:
         q2.processAllAvailable()
-        rows2 = read_until(spark, sink2, expect=2, wait_s=30.0)
+        rows2 = spark.table(sink2).collect()
     finally:
         q2.stop()
     assert sorted((r["key"], r["t_segment"]) for r in rows2) == [
@@ -99,14 +98,14 @@ def test_enrichment_re_resolves_dim_per_microbatch(spark, tmp_path):
     q, sink = start_memory_sink(enriched, checkpoint_root=os.path.join(d, "c"))
     try:
         q.processAllAvailable()
-        first = read_until(spark, sink, expect=1, wait_s=30.0)
+        first = spark.table(sink).collect()
         assert [(r["key"], r["t_segment"]) for r in first] == [("k1", "v1")]
 
         # in-place dim update + a second stream batch for the same key
         _write_dim(dim_dir, [{"key": "k1", "segment": "v2"}])
         src.add_batch([{"key": "k1", "value": "b", "ts": _ts(1)}])
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=2, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     by_value = {r["value"]: r["t_segment"] for r in rows}

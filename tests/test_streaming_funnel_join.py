@@ -12,7 +12,6 @@ import pytest
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 from kafka_streams_join_spark.streaming.topology import stream_funnel
@@ -71,7 +70,7 @@ def test_funnel_emits_only_completed_ordered_chains(spark, tmpdir):
     q, sink = start_memory_sink(out, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=1, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
 

@@ -24,7 +24,6 @@ import pytest
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
     drain_until_ingested,
-    read_until,
     start_memory_sink,
 )
 from kafka_streams_join_spark.streaming.shifter import (
@@ -129,8 +128,8 @@ def _run_topology(spark, tmpdir, display_batches, click_batches):
     try:
         clicked_q.processAllAvailable()
         missed_q.processAllAvailable()
-        clicked = read_until(spark, clicked_sink, expect=1, wait_s=30.0)
-        missed = read_until(spark, missed_sink, expect=1, wait_s=30.0)
+        clicked = spark.table(clicked_sink).collect()
+        missed = spark.table(missed_sink).collect()
     finally:
         clicked_q.stop()
         missed_q.stop()
@@ -339,7 +338,7 @@ def test_scenario4_shifter_event_time(spark, tmpdir):
     q, sink = start_memory_sink(shifted, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=1, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     assert [(r["key"], r["value"], r["ts"]) for r in rows] == [

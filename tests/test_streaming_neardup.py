@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
     drain_until_ingested,
-    read_until,
     start_memory_sink,
 )
 from kafka_streams_join_spark.streaming.neardup import (
@@ -96,7 +95,7 @@ def test_stream_neardup_emission_and_eviction(spark, tmpdir):
             ]
         )
         drain_until_ingested(q, total_rows=2)
-        got = read_until(spark, sink, expect=16, wait_s=180.0)
+        got = spark.table(sink).collect()
         assert len(got) == 16
 
         # batch 2: an exact dup emits nothing; a near-dup emits only its
@@ -108,7 +107,7 @@ def test_stream_neardup_emission_and_eviction(spark, tmpdir):
             ]
         )
         drain_until_ingested(q, total_rows=4)
-        got = read_until(spark, sink, expect=16 + (n_bands - shared), wait_s=180.0)
+        got = spark.table(sink).collect()
         by_key: dict[str, int] = {}
         for r in got:
             by_key[r["key"]] = by_key.get(r["key"], 0) + 1
@@ -126,9 +125,7 @@ def test_stream_neardup_emission_and_eviction(spark, tmpdir):
         # re-emitted (within-delay dedup is the contract, not forever)
         docs.add_batch([{"key": "d6", "value": A, "ts": "2024-01-01T01:00:05"}])
         drain_until_ingested(q, total_rows=6)
-        got = read_until(
-            spark, sink, expect=len(got) + n_bands + n_bands, wait_s=180.0
-        )
+        got = spark.table(sink).collect()
         by_key = {}
         for r in got:
             by_key[r["key"]] = by_key.get(r["key"], 0) + 1
@@ -167,7 +164,7 @@ def test_stream_novelty_counts_chains_two_stateful_ops(spark, tmpdir):
         drain_until_ingested(q, total_rows=4)
         got = {
             r["key"]: r["novel_bands"]
-            for r in read_until(spark, sink, expect=2, wait_s=180.0)
+            for r in spark.table(sink).collect()
         }
     finally:
         q.stop()
@@ -191,7 +188,7 @@ def test_stream_neardup_short_doc_fallback(spark, tmpdir):
             ]
         )
         q.processAllAvailable()
-        got = read_until(spark, sink, expect=16, wait_s=180.0)
+        got = spark.table(sink).collect()
         by_key: dict[str, int] = {}
         for r in got:
             by_key[r["key"]] = by_key.get(r["key"], 0) + 1

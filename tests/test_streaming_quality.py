@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 
@@ -58,7 +57,7 @@ def test_stream_scrub_matches_batch(spark, tmpdir):
     q, sink = start_memory_sink(scrubbed, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        got = {r.key: r for r in read_until(spark, sink, expect=3)}
+        got = {r.key: r for r in spark.table(sink).collect()}
     finally:
         q.stop()
 

@@ -11,7 +11,6 @@ import pytest
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 from kafka_streams_join_spark.streaming.stateful import stream_dedup
@@ -52,7 +51,7 @@ def test_stream_dedup_within_watermark(spark, tmpdir):
     q, sink = start_memory_sink(deduped, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=2, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     assert sorted((r["key"], r["value"]) for r in rows) == [

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from kafka_streams_join_spark.streaming.harness import (
     FileStream,
-    read_until,
     start_memory_sink,
 )
 from kafka_streams_join_spark.streaming.windows import (
@@ -57,7 +56,7 @@ def test_tumbling_agg_emits_finalized_windows(spark, tmpdir):
     q, sink = start_memory_sink(agg, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=2, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     got = {
@@ -98,7 +97,7 @@ def test_tumbling_sketch_agg_matches_batch_twin(spark, tmpdir):
         q.processAllAvailable()
         got = {
             (r["win_start"], r["key"]): r["approx_users"]
-            for r in read_until(spark, sink, expect=3)
+            for r in spark.table(sink).collect()
             if r["key"] == "a"
         }
     finally:
@@ -138,7 +137,7 @@ def test_session_agg_splits_on_gap(spark, tmpdir):
     q, sink = start_memory_sink(agg, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=2, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     got = {
@@ -151,27 +150,33 @@ def test_session_agg_splits_on_gap(spark, tmpdir):
 
 
 def test_error_listener_observes_lifecycle(spark, tmpdir, caplog):
-    """The L3 listener sees start and clean termination of a query."""
+    """The L3 listener, which ``get_spark`` installed on the session, sees
+    start and clean termination of a query and counts its ingested row
+    once: installing it again on the same session is a no-op."""
     import logging
+    import time
 
-    from kafka_streams_join_spark.streaming.listener import (
-        install_error_listener,
-    )
+    from kafka_streams_join_spark.streaming.listener import LISTENER
 
-    listener = install_error_listener(spark)
-    try:
-        src = FileStream(spark, tmpdir, "input")
-        src.add_batch([{"key": "a", "value": "1", "ts": _ts(0)}])
-        agg = stream_tumbling_agg(src.df(), window="1 minute")
-        with caplog.at_level(logging.INFO, logger="kafka_streams_join_spark.streaming.listener"):
-            q, _ = start_memory_sink(agg, checkpoint_root=tmpdir)
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination(10)
-        msgs = [r.getMessage() for r in caplog.records]
-        assert any("started" in m for m in msgs)
-    finally:
-        spark.streams.removeListener(listener)
+    LISTENER.install(spark)
+    src = FileStream(spark, tmpdir, "input")
+    src.add_batch([{"key": "a", "value": "1", "ts": _ts(0)}])
+    agg = stream_tumbling_agg(src.df(), window="1 minute")
+    with caplog.at_level(logging.INFO, logger="kafka_streams_join_spark.streaming.listener"):
+        q, _ = start_memory_sink(agg, checkpoint_root=tmpdir)
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination(10)
+        # the bus delivers a query's events in order: once its terminated
+        # event is logged, every progress event has been counted
+        terminated = f"terminated cleanly: {q.id}"
+        deadline = time.time() + 30
+        while not any(terminated in r.getMessage() for r in caplog.records):
+            assert time.time() < deadline, "no terminated event logged"
+            time.sleep(0.1)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any("started" in m for m in msgs)
+    assert LISTENER.ingested_rows(q) == 1
 
 
 def test_window_helpers_emit_unique_columns(spark):
@@ -200,7 +205,6 @@ def test_stream_table_join_enriches_per_microbatch(spark, tmpdir):
     watermark, no state. Left-outer keeps unmatched stream rows."""
     from kafka_streams_join_spark.streaming.harness import (
         FileStream,
-        read_until,
         start_memory_sink,
     )
     from kafka_streams_join_spark.streaming.topology import stream_table_join
@@ -219,7 +223,7 @@ def test_stream_table_join_enriches_per_microbatch(spark, tmpdir):
     q, sink = start_memory_sink(out, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=2, wait_s=30.0)
+        rows = spark.table(sink).collect()
     finally:
         q.stop()
     got = sorted((r["key"], r["t_label"]) for r in rows)
@@ -241,7 +245,6 @@ def test_late_event_is_dropped_from_closed_window(spark, tmpdir):
     SURVEY §2.6 late-data row.)"""
     from kafka_streams_join_spark.streaming.harness import (
         FileStream,
-        read_until,
         start_memory_sink,
     )
 
@@ -267,7 +270,7 @@ def test_late_event_is_dropped_from_closed_window(spark, tmpdir):
     q, sink = start_memory_sink(out, checkpoint_root=tmpdir)
     try:
         q.processAllAvailable()
-        rows = read_until(spark, sink, expect=1, wait_s=30.0)
+        rows = spark.table(sink).collect()
         dropped = sum(
             op.get("numRowsDroppedByWatermark", 0)
             for p in q.recentProgress
